@@ -1155,10 +1155,13 @@ def _q_dedup_minhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5-minhash signatures — the engine-neutral variant that gives
     the minhash machinery a cross-engine SQL oracle."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_md5_signature,
+        MD5,
+        minhash_signature_table,
     )
 
-    return minhash_md5_signature(_load(spark, sf_dir, "documents"), n_hashes=8)
+    return minhash_signature_table(
+        _load(spark, sf_dir, "documents"), family=MD5
+    ).drop("n_sh")
 
 
 _MH_SHINGLES_CTE = """
@@ -1189,12 +1192,11 @@ def _q_dedup_minhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     blocking path (signature → band hash → bucket self-join) checked
     cross-engine."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_md5_candidate_pairs,
+        MD5,
+        minhash_band_pairs,
     )
 
-    return minhash_md5_candidate_pairs(
-        _load(spark, sf_dir, "documents"), n_hashes=8, n_bands=4
-    )
+    return minhash_band_pairs(_load(spark, sf_dir, "documents"), family=MD5)
 
 
 _DEDUP_MINHASH_MD5_PAIRS_SQL = (
@@ -1225,10 +1227,10 @@ def _q_dedup_minhash_md5_clusters(spark: SparkSession, sf_dir: str) -> DataFrame
     transitive-closure CTE — this upgrades the clustering family from
     rows-only to hash-checked (the xxhash64 `dedup_minhash` remains
     the production path)."""
-    from portuguese_pt_legal_ner_spark.operators.dedup import minhash_md5_dedup  # noqa: PLC0415
+    from portuguese_pt_legal_ner_spark.operators.dedup import MD5, minhash_dedup  # noqa: PLC0415
 
-    return minhash_md5_dedup(
-        _load(spark, sf_dir, "documents"), threshold=0.6, n_hashes=8, n_bands=4
+    return minhash_dedup(
+        _load(spark, sf_dir, "documents"), threshold=0.6, family=MD5
     )
 
 
@@ -1293,21 +1295,20 @@ def _q_dedup_minhash_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     new bands equi-join the index band table (the increment never
     self-joins the corpus), the exact-Jaccard verify re-shingles only
     semi-joined candidates, ties break to the smallest cluster_id,
-    unmatched docs found their own cluster. md5 band family so the
-    DuckDB oracle replays the identical blocking; exercises
-    minhash_assign_new itself (the md5 wrapper only swaps bands_fn)."""
+    unmatched docs found their own cluster. md5 family (recorded in
+    the index, which the assign reads it from) so the DuckDB oracle
+    replays the identical blocking."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (  # noqa: PLC0415
-        minhash_md5_assign_new,
-        minhash_md5_index,
+        MD5,
+        minhash_assign_new,
+        minhash_index,
     )
 
     docs = _load(spark, sf_dir, "documents")
     corpus = docs.filter(F.col("doc_id") < _ASSIGN_SPLIT)
     new = docs.filter(F.col("doc_id") >= _ASSIGN_SPLIT)
-    idx = minhash_md5_index(corpus, threshold=0.6, n_hashes=8, n_bands=4)
-    return minhash_md5_assign_new(
-        idx, new, threshold=0.6, n_hashes=8, n_bands=4, corpus_docs=corpus
-    )
+    idx = minhash_index(corpus, threshold=0.6, family=MD5)
+    return minhash_assign_new(idx, new, threshold=0.6, corpus_docs=corpus)
 
 
 _MH_SIG_BANDS_CTES = (
@@ -1585,21 +1586,24 @@ def _q_dedup_simhash_md5(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5-simhash signatures — engine-neutral (bit i = token majority
     of the low bit of md5 hex digit i), giving the simhash machinery a
     cross-engine SQL oracle (the dedup_minhash_md5 pattern)."""
-    from portuguese_pt_legal_ner_spark.operators.dedup import simhash_md5_table  # noqa: PLC0415
+    from portuguese_pt_legal_ner_spark.operators.dedup import SIM_MD5, simhash_table  # noqa: PLC0415
 
-    return simhash_md5_table(_load(spark, sf_dir, "documents"))
+    return simhash_table(_load(spark, sf_dir, "documents"), SIM_MD5)
 
 
 def _q_dedup_simhash_md5_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """md5-simhash banded near-dup pairs + hamming verify — the full
-    simhash blocking path checked cross-engine."""
+    simhash blocking path checked cross-engine (hamming as BIGINT, the
+    oracle's type)."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (  # noqa: PLC0415
-        simhash_md5_neardup_pairs,
+        SIM_MD5,
+        simhash_neardup_pairs,
     )
 
-    return simhash_md5_neardup_pairs(
-        _load(spark, sf_dir, "documents"), max_hamming=3, n_bands=4
-    )
+    return simhash_neardup_pairs(
+        _load(spark, sf_dir, "documents"), max_hamming=3, n_bands=4,
+        family=SIM_MD5,
+    ).withColumn("hamming", F.col("hamming").cast("long"))
 
 
 _HEX_ODD_SQL = "('1','3','5','7','9','b','d','f')"
@@ -1649,11 +1653,12 @@ def _q_dedup_simhash_md5_clusters(spark: SparkSession, sf_dir: str) -> DataFrame
     components → numeric-min cluster representative; DuckDB replays the
     components with a recursive transitive-closure CTE (the
     dedup_minhash_md5_clusters pattern for the simhash family — the
-    xxhash64 `simhash_dedup` is the production twin)."""
-    from portuguese_pt_legal_ner_spark.operators.dedup import simhash_md5_dedup  # noqa: PLC0415
+    SIM_XXH64 family is the production one)."""
+    from portuguese_pt_legal_ner_spark.operators.dedup import SIM_MD5, simhash_dedup  # noqa: PLC0415
 
-    return simhash_md5_dedup(
-        _load(spark, sf_dir, "documents"), max_hamming=3, n_bands=4
+    return simhash_dedup(
+        _load(spark, sf_dir, "documents"), max_hamming=3, n_bands=4,
+        family=SIM_MD5,
     )
 
 
@@ -1860,10 +1865,10 @@ def _q_stream_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     in-stream simhash, stateful band buckets, watermark-bounded state.
 
     VALUE-CHECKED (round-4 verdict item 1): the in-stream hash is the
-    same engine-neutral md5 family as the batch simhash_md5_table, so
+    same engine-neutral SIM_MD5 family as the batch simhash_table, so
     with every document inside the horizon and the star cap un-hit the
     stream's finalized distinct pair set equals the batch
-    simhash_md5_neardup_pairs output — the oracle below IS the batch
+    simhash_neardup_pairs(family=SIM_MD5) output — the oracle below IS the batch
     path's DuckDB SQL. Cap/horizon/restart semantics are pytest-gated
     in test_streaming.py."""
     import os  # noqa: PLC0415

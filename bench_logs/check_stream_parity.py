@@ -3,7 +3,7 @@ import sys
 sys.path.insert(0, "/root/repo")
 import __spark_entry__ as em
 from portuguese_pt_legal_ner_spark.session import build_session
-from portuguese_pt_legal_ner_spark.operators.dedup import simhash_md5_neardup_pairs
+from portuguese_pt_legal_ner_spark.operators.dedup import SIM_MD5, simhash_neardup_pairs
 from pyspark.sql import functions as F
 
 spark = build_session(app_name="parity", master="local[32]", shuffle_partitions=32)
@@ -11,7 +11,7 @@ spark.sparkContext.setLogLevel("ERROR")
 
 for sf_dir in ["/root/testdata/sf0.01", "/root/testdata/sf0.1"]:
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    batch = simhash_md5_neardup_pairs(docs, max_hamming=3, n_bands=4)
+    batch = simhash_neardup_pairs(docs, max_hamming=3, n_bands=4, family=SIM_MD5)
 
     sp = em.queries()["stream_neardup_pairs"](spark, sf_dir)
     d1 = sp.subtract(batch).count()

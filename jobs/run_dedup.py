@@ -1,15 +1,18 @@
 """spark-submit entrypoint for the dedup families (build + incremental).
 
-Two families share the CLI (--family minhash|simhash): minhash verifies
-with exact Jaccard (assign re-shingles banded corpus candidates via
---corpus); simhash verifies with hamming on the indexed sim words
-(assign needs no corpus access at all).
+Two families share the CLI: minhash verifies with exact Jaccard (assign
+re-shingles banded corpus candidates via --corpus); simhash verifies
+with hamming on the indexed sim words (assign needs no corpus access).
+The family, ngram and banding are chosen at BUILD time and recorded in
+the index meta; assign reads them back from the index, so --family,
+--ngram and --n-bands are build-only.
 
 Build (cluster a corpus at rest, persist the incremental index):
     python -m zipfile -c /tmp/pkg.zip portuguese_pt_legal_ner_spark
     spark-submit --py-files /tmp/pkg.zip jobs/run_dedup.py build \
         --input <documents_parquet> --index-dir <dir> \
-        [--threshold 0.8] [--checkpoint-dir <hdfs-dir>] [--out <parquet>]
+        [--family minhash|simhash] [--threshold 0.8] [--ngram 3] \
+        [--n-bands 4] [--checkpoint-dir <hdfs-dir>] [--out <parquet>]
 
 Assign (near-dup-assign a daily increment against the built index —
 never re-clusters the corpus):
@@ -17,8 +20,8 @@ never re-clusters the corpus):
         --input <new_documents_parquet> --corpus <documents_parquet> \
         --index-dir <dir> [--threshold 0.8] [--out <parquet>]
 
-Local smoke (this sandbox):
-    python jobs/run_dedup.py build --input /root/testdata/sf0.001/documents.parquet \
+Local smoke:
+    python jobs/run_dedup.py build --input <sf0.001>/documents.parquet \
         --index-dir /tmp/mhidx --out /tmp/clusters
 
 Outputs one JSON line with row counts; cluster assignments land in
@@ -40,7 +43,7 @@ def main() -> None:
     parser.add_argument("mode", choices=["build", "assign"])
     parser.add_argument("--family", choices=["minhash", "simhash"],
                         default="minhash",
-                        help="dedup family: minhash (Jaccard over word "
+                        help="build only: minhash (Jaccard over word "
                         "n-grams; assign re-shingles banded corpus "
                         "candidates) or simhash (hamming over the 64-bit "
                         "signature; assign re-reads NO corpus text)")
@@ -49,32 +52,32 @@ def main() -> None:
                         "increment for assign)")
     parser.add_argument("--corpus", default=None,
                         help="corpus documents parquet (assign mode: the "
-                        "exact-Jaccard verify re-shingles banded candidates)")
+                        "minhash exact-Jaccard verify re-shingles banded "
+                        "candidates; simhash uses it for the staleness "
+                        "warning only)")
     parser.add_argument("--index-dir", required=True)
     parser.add_argument("--threshold", type=float, default=0.8)
-    parser.add_argument("--ngram", type=int, default=3)
+    parser.add_argument("--ngram", type=int, default=3,
+                        help="build only, minhash family")
     parser.add_argument("--max-bucket-size", type=int, default=None)
     parser.add_argument("--max-hamming", type=int, default=3,
                         help="simhash family: hamming threshold")
     parser.add_argument("--n-bands", type=int, default=4,
-                        help="simhash family: band count (pigeonhole "
-                        "bound max-hamming <= n-bands - 1)")
+                        help="build only, simhash family: band count "
+                        "(pigeonhole bound max-hamming <= n-bands - 1)")
     parser.add_argument("--checkpoint-dir", default=None,
                         help="reliable-checkpoint dir for CC iterations "
                         "(build mode; default localCheckpoint)")
     parser.add_argument("--out", default=None, help="output parquet path")
     parser.add_argument("--master", default=None)
     args = parser.parse_args()
-    if args.mode == "assign" and args.family == "minhash" and not args.corpus:
-        parser.error("minhash assign needs --corpus (the index stores "
-                     "bands, not gram payloads; the simhash family does "
-                     "not need it)")
 
     from portuguese_pt_legal_ner_spark.cache import release_tracked
     from portuguese_pt_legal_ner_spark.operators.dedup import (
+        FAMILIES,
         MAX_BAND_BUCKET,
-        load_minhash_index,
-        load_simhash_index,
+        SimHashFamily,
+        load_index,
         minhash_assign_new,
         minhash_index,
         simhash_assign_new,
@@ -87,6 +90,7 @@ def main() -> None:
     cap = args.max_bucket_size or MAX_BAND_BUCKET
 
     docs = spark.read.parquet(args.input)
+    corpus = spark.read.parquet(args.corpus) if args.corpus else None
     if args.mode == "build":
         # both builds hash the corpus ONCE and share the persisted
         # spine/sim table between the band table and the clustering
@@ -103,27 +107,26 @@ def main() -> None:
         index.save(args.index_dir)
         release_tracked()  # drop the build's persisted intermediates
         result = spark.read.parquet(f"{args.index_dir}/clusters")
-    elif args.family == "simhash":
-        index = load_simhash_index(spark, args.index_dir)
-        current = (
-            spark.read.parquet(args.corpus) if args.corpus else None
-        )  # optional: enables the staleness drift warning
-        result = simhash_assign_new(
-            index, docs, args.max_hamming, current=current
-        )
     else:
-        index = load_minhash_index(spark, args.index_dir)
-        result = minhash_assign_new(
-            index, docs, args.threshold, args.ngram,
-            corpus_docs=spark.read.parquet(args.corpus),
-        )
+        index = load_index(spark, args.index_dir)
+        if isinstance(FAMILIES.get(index.family), SimHashFamily):
+            result = simhash_assign_new(index, docs, args.max_hamming, current=corpus)
+        elif corpus is None:
+            parser.error("minhash assign needs --corpus (the index stores "
+                         "bands, not gram payloads)")
+        else:
+            result = minhash_assign_new(
+                index, docs, args.threshold, corpus_docs=corpus
+            )
     if args.out:
         result.write.mode("overwrite").parquet(args.out)
         result = spark.read.parquet(args.out)
     n_docs = result.count()
     n_clusters = result.select("cluster_id").distinct().count()
     print(json.dumps({
-        "mode": args.mode, "family": args.family, "docs": n_docs,
+        "mode": args.mode,
+        "family": args.family if args.mode == "build" else index.family,
+        "docs": n_docs,
         "clusters": n_clusters, "index_dir": args.index_dir,
         "out": args.out,
     }))

@@ -25,9 +25,15 @@ from __future__ import annotations
 import random
 
 from pyspark.sql import Column, DataFrame, Window
-
-from ..cache import sql_over
 from pyspark.sql import functions as F
+
+from .dedup import (
+    MAX_BAND_BUCKET,
+    IndexSnapshot,
+    _bit_bands,
+    _cap_buckets,
+    _ensure_parallelism,
+)
 
 DIM = 64
 N_PLANES = 24
@@ -101,32 +107,11 @@ def _hyperplanes(seed: int = 42) -> list[list[float]]:
     ]
 
 
-def srp_sketch(vec: Column, seed: int = 42) -> Column:
-    """N_PLANES sign bits packed into an int (literal hyperplanes) —
-    pure-column reference implementation; prefer srp_sketch_pandas in
-    hot paths (one numpy matmul per Arrow batch vs 16 array passes
-    per row)."""
-    planes = _hyperplanes(seed)
-    bits = [
-        F.when(
-            dot(vec, F.array(*[F.lit(x) for x in plane])) > 0,
-            F.shiftleft(F.lit(1), i),
-        ).otherwise(F.lit(0))
-        for i, plane in enumerate(planes)
-    ]
-    out = bits[0]
-    for b in bits[1:]:
-        out = out.bitwiseOR(b)
-    return out
-
-
 def srp_sketch_pandas(vec: Column, seed: int = 42) -> Column:
     """Vectorized SRP sketch: Arrow-batched pandas UDF, one
     [batch, 64] @ [64, 16] matmul + sign-bit packing per batch.
-    Same hyperplanes as srp_sketch; sign boundaries can differ in the
-    last float ulp between the two implementations (different
-    summation order), which only perturbs bucket assignment of
-    near-orthogonal vectors — irrelevant to ANN recall."""
+    Hyperplanes are literal per seed (_hyperplanes), so every
+    executor and every run sketches identically."""
     import numpy as np  # noqa: PLC0415
     import pandas as pd  # noqa: PLC0415
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415
@@ -175,8 +160,6 @@ def srp_ann_topk(
     search a capped bucket merely trims an over-crowded candidate pool
     (unlike clustering, where the dedup module star-links instead);
     audit dropped volume with srp_oversized_buckets()."""
-    from .dedup import MAX_BAND_BUCKET, _cap_buckets  # noqa: PLC0415
-
     if max_bucket_size is None:
         max_bucket_size = MAX_BAND_BUCKET
     qb = _srp_bands(queries.select("qid", "qe"), "qid", "qe", n_bands, seed)
@@ -188,7 +171,7 @@ def srp_ann_topk(
         seed,
     )
     if max_bucket_size:
-        cb = _cap_buckets(cb, ["band_idx", "band_val"], max_bucket_size)
+        cb = _cap_buckets(cb, ["band_idx", "band_val"], "cid", max_bucket_size)
     cands = (
         qb.join(cb, ["band_idx", "band_val"])
         .filter(F.col("qid") != F.col("cid"))
@@ -216,24 +199,11 @@ def srp_ann_topk(
 def _srp_bands(
     df: DataFrame, id_col: str, vec_col: str, n_bands: int, seed: int
 ) -> DataFrame:
-    """(id, band_idx, band_val) — the slim SRP band spine; no vector
-    payload ever enters the band exchange. Templated spark.sql (the
-    py4j plan-construction tax — see dedup.simhash_table)."""
-    bits_per_band = N_PLANES // n_bands
-    mask = (1 << bits_per_band) - 1
+    """(id, band_idx, band_val) — the slim SRP band spine: the sketch
+    sliced by dedup's bit-slice band builder; no vector payload ever
+    enters the band exchange."""
     sk = df.withColumn("_sk", srp_sketch_pandas(F.col(vec_col), seed))
-    structs = ", ".join(
-        f"struct({b} AS band_idx, "
-        f"(shiftright(_sk, {b * bits_per_band}) & {mask}) AS band_val)"
-        for b in range(n_bands)
-    )
-    return sql_over(
-        f"""
-        SELECT {id_col}, band.band_idx, band.band_val
-        FROM (SELECT {id_col}, explode(array({structs})) AS band FROM {{sk}})
-        """,
-        sk=sk,
-    )
+    return _bit_bands(sk, id_col, "_sk", n_bands, N_PLANES)
 
 
 def srp_oversized_buckets(
@@ -244,8 +214,6 @@ def srp_oversized_buckets(
 ) -> DataFrame:
     """Audit view of SRP band buckets above the cap — (band_idx,
     band_val, n_vecs). The no-silent-caps companion to srp_ann_topk."""
-    from .dedup import MAX_BAND_BUCKET  # noqa: PLC0415
-
     if max_bucket_size is None:
         max_bucket_size = MAX_BAND_BUCKET
     cb = _srp_bands(
@@ -404,8 +372,6 @@ def kmeans_cells(
     sample_size=None to train on everything with the distributed
     aggregation loop (one map-side-combined job per iteration).
     """
-    from .dedup import _ensure_parallelism  # noqa: PLC0415
-
     if sample_size:
         import numpy as np  # noqa: PLC0415
 
@@ -460,7 +426,7 @@ def kmeans_cells(
     return cents
 
 
-class IVFIndex:
+class IVFIndex(IndexSnapshot):
     """The built IVF index: driver-side centroids (k × DIM floats) +
     the distributed cell assignment (cid, ce, cell), persisted.
 
@@ -470,30 +436,22 @@ class IVFIndex:
     save()/load_ivf_index() round-trip it through parquet so a
     separate probe job (or a later session) reuses the build.
 
-    `n_vectors` is the indexed row count recorded at build — the
-    staleness fingerprint: an index answers for the snapshot it was
-    built from, and rows appended to the source afterwards are
-    silently unreachable through it. `is_stale(current)` compares, and
-    ivf_probe warns when handed the live table (round-3 verdict item
-    10). A richer snapshot id (Iceberg snapshot, Delta version) slots
-    into the same field on a real lakehouse."""
+    `n_docs` is the indexed vector count recorded at build — the
+    IndexSnapshot staleness fingerprint shared with the dedup indexes:
+    ivf_probe warns when handed a live table that has drifted from it
+    (round-3 verdict item 10)."""
+
+    _logger = "portuguese_pt_legal_ner_spark.similarity"
 
     def __init__(
         self,
         centroids: list[list[float]],
         cells: DataFrame,
-        n_vectors: int | None = None,
+        n_docs: int | None = None,
     ):
         self.centroids = centroids
         self.cells = cells
-        self.n_vectors = n_vectors
-
-    def is_stale(self, current: DataFrame) -> bool:
-        """True when the live table's row count no longer matches the
-        count recorded at build (unknown build count → not provable)."""
-        if self.n_vectors is None:
-            return False
-        return current.count() != self.n_vectors
+        self.n_docs = n_docs
 
     def save(self, path: str) -> None:
         spark = self.cells.sparkSession
@@ -503,7 +461,7 @@ class IVFIndex:
         ).write.mode("overwrite").parquet(f"{path}/centroids")
         self.cells.write.mode("overwrite").parquet(f"{path}/cells")
         spark.createDataFrame(
-            [(self.n_vectors,)], "n_vectors long"
+            [(self.n_docs,)], "n_vectors long"
         ).write.mode("overwrite").parquet(f"{path}/meta")
 
     def unpersist(self) -> None:
@@ -538,8 +496,6 @@ def ivf_index(
     persist=False for one-shot build-probe-discard use (ivf_topk with
     no caller-held index): the cell assignment is read exactly once,
     so caching it only leaks blocks into a long-lived session."""
-    from .dedup import _ensure_parallelism  # noqa: PLC0415
-
     cents = kmeans_cells(embeddings, n_cells, iters, seed, sample_size)
     emb = _ensure_parallelism(embeddings)
     cells = emb.select(
@@ -560,7 +516,7 @@ def ivf_append(index: IVFIndex, new_embeddings: DataFrame) -> IVFIndex:
     """Append NEW vectors to a built IVF index without retraining:
     assign them to the EXISTING centroids (one closure-captured matmul
     pass over the increment only — never the indexed corpus) and union
-    the cell assignment. Returns a new IVFIndex whose `n_vectors`
+    the cell assignment. Returns a new IVFIndex whose `n_docs`
     fingerprint covers the grown snapshot, so a daily-embedding
     pipeline alternates ivf_append()/ivf_probe() without tripping the
     staleness warning — the IVF analog of minhash_assign_new /
@@ -572,8 +528,6 @@ def ivf_append(index: IVFIndex, new_embeddings: DataFrame) -> IVFIndex:
     ivf_index() when drift matters. The appended cells ride a fresh
     persist; the old index's cache is released (its blocks would
     otherwise leak in a long-lived driver)."""
-    from .dedup import _ensure_parallelism  # noqa: PLC0415
-
     emb = _ensure_parallelism(new_embeddings)
     new_cells = emb.select(
         F.col("vec_id").alias("cid"),
@@ -602,15 +556,7 @@ def ivf_probe(
     index before probing: rows appended since the build are invisible
     to the probe, so a drifted index logs a WARNING telling the
     caller to rebuild (round-3 verdict item 10)."""
-    if current is not None and index.is_stale(current):
-        import logging  # noqa: PLC0415
-
-        logging.getLogger("portuguese_pt_legal_ner_spark.similarity").warning(
-            "ivf_probe: index is stale (built over %s vectors, source now "
-            "differs) — appended rows are unreachable; rebuild with "
-            "ivf_index()",
-            index.n_vectors,
-        )
+    index.warn_if_stale(current, "ivf_probe", "ivf_index")
     probed = (
         queries.select(
             "qid", "qe",

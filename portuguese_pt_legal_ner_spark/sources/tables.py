@@ -19,11 +19,6 @@ from pyspark.sql import types as T
 
 from ..synth import generate_alias_dict, generate_transcripts
 
-TESTDATA_TABLES = (
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-)
-
 TRANSCRIPTS_SCHEMA = T.StructType(
     [
         T.StructField("conv_id", T.StringType()),
@@ -46,11 +41,6 @@ ALIAS_DICT_SCHEMA = T.StructType(
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def register_testdata_views(spark: SparkSession, sf_dir: str) -> None:
-    for name in TESTDATA_TABLES:
-        load_table(spark, sf_dir, name).createOrReplaceTempView(name)
 
 
 def synthetic_transcripts(

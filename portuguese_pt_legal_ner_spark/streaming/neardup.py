@@ -18,12 +18,13 @@ members are pruned `delay_sec` behind `newest`, so a late row can miss
 partners in the sliver [newest-2·delay, newest-delay); that sliver is
 the standard price of bounded streaming state.
 
-Shape (the streaming analog of simhash_md5_neardup_pairs):
+Shape (the streaming analog of the batch simhash_neardup_pairs over
+the SIM_MD5 family):
 
   * simhash is computed IN-STREAM by an Arrow-batched pandas UDF —
     row-local (one doc's tokens → one 32-bit word), so it needs no
     aggregation state. The hash family is the SAME engine-neutral
-    md5 family as the batch ``simhash_md5_table`` (bit i = token
+    md5 family as the batch ``simhash_table(docs, SIM_MD5)`` (bit i = token
     majority of the low bit of md5 hex digit i), asserted bit-equal
     in test_streaming — so the stream's finalized-horizon pair set is
     value-checkable against the batch pair set AND against the DuckDB
@@ -83,6 +84,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
+from ..operators.dedup import SIM_MD5
+
 DOCS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),
@@ -111,11 +114,11 @@ STATE_SCHEMA = T.StructType(
 
 MAX_STREAM_BUCKET = 1000
 
-SIMHASH_BITS = 32  # the md5 hex-digit family width (simhash_md5_table)
+SIMHASH_BITS = SIM_MD5.bits  # the md5 hex-digit family width
 
 # Java \s (Spark's split('\\s+')) is ASCII-only: [ \t\n\x0B\f\r].
 # Spark's trim() strips ONLY the space character. The replica below is
-# asserted bit-equal to simhash_md5_table in test_streaming.
+# asserted bit-equal to the batch SIM_MD5 simhash_table in test_streaming.
 _JAVA_WS = r"[ \t\n\x0b\f\r]+"
 
 
@@ -127,7 +130,7 @@ def _simhash32_md5_batch(texts) -> np.ndarray:
 
     Bit i = majority, over the doc's token OCCURRENCES, of the low bit
     of hex digit i of md5(token) — identical arithmetic to the batch
-    ``dedup.simhash_md5_table`` (hex digit 2k is the high nibble of
+    ``dedup.simhash_table`` over SIM_MD5 (hex digit 2k is the high nibble of
     digest byte k, 2k+1 the low nibble; 'odd hex digit' == low bit
     set)."""
     import hashlib  # noqa: PLC0415
@@ -164,7 +167,7 @@ def _simhash32_md5_batch(texts) -> np.ndarray:
 def simhash32_md5_pandas(text):
     """Arrow-batched per-document 32-bit md5 simhash — the row-local
     form streaming needs; the batch path's explode→aggregate shape
-    (dedup.simhash_md5_table) covers corpora at rest and carries the
+    (dedup.simhash_table over SIM_MD5) covers corpora at rest and carries the
     DuckDB oracle. Same hash family in both, so stream and batch pair
     sets are directly comparable."""
     from pyspark.sql.functions import pandas_udf  # noqa: PLC0415

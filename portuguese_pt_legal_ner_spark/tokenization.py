@@ -49,7 +49,3 @@ def tokenize_with_offsets(text: str, max_length: int | None = None) -> list[Toke
     toks = [Token(m.group(0), m.start(), m.end()) for m in _TOKEN_RE.finditer(text)]
     return toks[:max_length] if max_length else toks
 
-
-def simple_word_tokens(text: str) -> list[str]:
-    """Just the token strings (for shingling / counting paths)."""
-    return [t.text for t in tokenize_with_offsets(text)]

@@ -251,30 +251,32 @@ def test_simhash_md5_pairs_and_bounds(spark, docs):
     0, unrelated docs don't surface at a tight hamming bound, and the
     pigeonhole bound is enforced like the xxhash64 variant."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (
-        simhash_md5_neardup_pairs,
-        simhash_md5_table,
+        SIM_MD5,
+        simhash_table,
     )
 
-    sims = {r["doc_id"]: r["sim"] for r in simhash_md5_table(docs).collect()}
+    sims = {r["doc_id"]: r["sim"] for r in simhash_table(docs, SIM_MD5).collect()}
     assert sims[0] == sims[1]
     assert all(0 <= s < (1 << 32) for s in sims.values())
     pairs = {
         (r["doc_a"], r["doc_b"]): r["hamming"]
-        for r in simhash_md5_neardup_pairs(docs, max_hamming=3, n_bands=4).collect()
+        for r in simhash_neardup_pairs(
+            docs, max_hamming=3, n_bands=4, family=SIM_MD5
+        ).collect()
     }
     assert pairs.get((0, 1)) == 0
     assert (0, 3) not in pairs
     with pytest.raises(ValueError, match="pigeonhole"):
-        simhash_md5_neardup_pairs(docs, max_hamming=4, n_bands=4)
+        simhash_neardup_pairs(docs, max_hamming=4, n_bands=4, family=SIM_MD5)
 
 
-def test_md5_band_divisibility_enforced(spark, docs):
-    from portuguese_pt_legal_ner_spark.operators.dedup import (
-        minhash_md5_candidate_pairs,
-    )
+def test_md5_band_divisibility_enforced():
+    import dataclasses
+
+    from portuguese_pt_legal_ner_spark.operators.dedup import MD5
 
     with pytest.raises(ValueError, match="divide"):
-        minhash_md5_candidate_pairs(docs, n_hashes=8, n_bands=3)
+        dataclasses.replace(MD5, n_bands=3)
 
 
 def test_minhash_dedup_reliable_checkpoint(spark, docs, tmp_path):
@@ -533,14 +535,16 @@ def test_minhash_incremental_assignment(spark, tmp_path):
 
 def test_minhash_md5_incremental_assignment(spark):
     """The md5-family twin of incremental assignment (the variant that
-    carries the driver's SQL oracle): same assign operator, md5 bands.
+    carries the driver's SQL oracle): same assign operator, md5 bands
+    (read from the index's family).
     Checks the three semantic branches — join an existing cluster via
     the numeric-min representative, tie-break to the SMALLEST
     cluster_id when several corpus partners verify, and found a new
     cluster when nothing does."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (
-        minhash_md5_assign_new,
-        minhash_md5_index,
+        MD5,
+        minhash_assign_new,
+        minhash_index,
     )
 
     base = "o tribunal da relacao confirmou a sentenca no processo "
@@ -554,7 +558,7 @@ def test_minhash_md5_incremental_assignment(spark):
         ],
         "doc_id long, text string",
     )
-    idx = minhash_md5_index(corpus, threshold=0.5)
+    idx = minhash_index(corpus, threshold=0.5, family=MD5)
     new = spark.createDataFrame(
         [
             (100, base + "um dois tres quatro cinco seis sete NOVE"),
@@ -568,13 +572,117 @@ def test_minhash_md5_incremental_assignment(spark):
     )
     assigned = {
         r["doc_id"]: r["cluster_id"]
-        for r in minhash_md5_assign_new(
+        for r in minhash_assign_new(
             idx, new, threshold=0.5, corpus_docs=corpus
         ).collect()
     }
     assert assigned[100] == 2    # joined the {2, 9} cluster
     assert assigned[101] == 101  # novel doc founds its own cluster
     assert assigned[102] == 5    # joined doc 5's cluster
+
+
+def _assign_corpus(spark):
+    base = "o tribunal da relacao confirmou a sentenca no processo "
+    corpus = spark.createDataFrame(
+        [
+            (2, base + "um dois tres quatro cinco seis sete oito"),
+            (9, base + "um dois tres quatro cinco seis sete oito"),
+            (40, " ".join(f"token{i}" for i in range(30))),
+        ],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [
+            (100, base + "um dois tres quatro cinco seis sete NOVE"),
+            (101, " ".join(f"outro{i}" for i in range(25))),
+        ],
+        "doc_id long, text string",
+    )
+    return corpus, new
+
+
+def _rows(df):
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+
+def test_md5_index_round_trip_assigns_md5(spark, tmp_path):
+    """An md5-built index records its family: save → load_minhash_index
+    → minhash_assign_new bands the increment with md5 without the
+    caller naming the family, and matches the in-memory assign."""
+    from portuguese_pt_legal_ner_spark.operators.dedup import (
+        MD5,
+        load_minhash_index,
+        minhash_assign_new,
+        minhash_index,
+    )
+
+    corpus, new = _assign_corpus(spark)
+    idx = minhash_index(corpus, threshold=0.5, family=MD5)
+    idx.save(str(tmp_path / "md5idx"))
+    loaded = load_minhash_index(spark, str(tmp_path / "md5idx"))
+    assert (loaded.family, loaded.ngram, loaded.n_bands) == ("md5", 3, 4)
+    in_memory = _rows(minhash_assign_new(idx, new, threshold=0.5, corpus_docs=corpus))
+    got = _rows(minhash_assign_new(loaded, new, threshold=0.5, corpus_docs=corpus))
+    assert got == in_memory == {100: 2, 101: 101}
+
+
+def test_index_with_n_docs_only_meta_loads_as_xxh64(spark, tmp_path):
+    """An index dir whose meta holds n_docs alone (the layout written
+    before the meta named the family) loads as XXH64 at ngram 3 and
+    assigns exactly as the in-memory index does."""
+    from portuguese_pt_legal_ner_spark.operators.dedup import (
+        XXH64,
+        load_minhash_index,
+        minhash_assign_new,
+        minhash_index,
+    )
+
+    corpus, new = _assign_corpus(spark)
+    idx = minhash_index(corpus, threshold=0.5)
+    path = str(tmp_path / "oldidx")
+    idx.save(path)
+    spark.createDataFrame([(3,)], "n_docs long").write.mode("overwrite").parquet(
+        f"{path}/meta"
+    )
+    loaded = load_minhash_index(spark, path)
+    assert (loaded.family, loaded.ngram, loaded.n_bands, loaded.n_docs) == (
+        XXH64.name, 3, XXH64.n_bands, 3
+    )
+    expected = _rows(minhash_assign_new(idx, new, threshold=0.5, corpus_docs=corpus))
+    got = _rows(minhash_assign_new(loaded, new, threshold=0.5, corpus_docs=corpus))
+    assert got == expected == {100: 2, 101: 101}
+
+
+def test_assign_picks_smallest_cluster_not_best_match(spark):
+    """A new doc that verifies against two clusters joins the SMALLEST
+    cluster_id, even when its higher-Jaccard match is the other
+    cluster (the dedup_minhash_assign oracle's rule)."""
+    from portuguese_pt_legal_ner_spark.operators.dedup import (
+        minhash_assign_new,
+        minhash_index,
+    )
+
+    shared = [f"s{i}" for i in range(22)]
+    t1 = [f"x{i}" for i in range(4)] + shared  # cluster 2
+    t2 = shared + ["y0", "y1"]  # cluster 9
+    corpus = spark.createDataFrame(
+        [(2, " ".join(t1)), (9, " ".join(t2))], "doc_id long, text string"
+    )
+    new = spark.createDataFrame([(100, " ".join(shared))], "doc_id long, text string")
+
+    def grams(words):
+        return {tuple(words[i : i + 3]) for i in range(len(words) - 2)}
+
+    def jac(a, b):
+        return len(grams(a) & grams(b)) / len(grams(a) | grams(b))
+
+    # premise: 2 and 9 stay separate, the new doc verifies against both,
+    # and its best match is the larger id
+    assert jac(t1, t2) < 0.8 <= jac(shared, t1) < jac(shared, t2)
+    idx = minhash_index(corpus, threshold=0.8)
+    assert _rows(idx.clusters) == {2: 2, 9: 9}
+    got = _rows(minhash_assign_new(idx, new, threshold=0.8, corpus_docs=corpus))
+    assert got == {100: 2}
 
 
 def test_embedding_incremental_assignment(spark, tmp_path):
@@ -586,7 +694,7 @@ def test_embedding_incremental_assignment(spark, tmp_path):
     from portuguese_pt_legal_ner_spark.operators.dedup import (
         embedding_assign_new,
         embedding_index,
-        load_embedding_index,
+        load_index,
     )
 
     rng = random.Random(5)
@@ -598,7 +706,7 @@ def test_embedding_incremental_assignment(spark, tmp_path):
     )
     idx = embedding_index(corpus, threshold=0.95)
     idx.save(str(tmp_path / "eidx"))
-    loaded = load_embedding_index(spark, str(tmp_path / "eidx"))
+    loaded = load_index(spark, str(tmp_path / "eidx"))
 
     near = [x * 1.001 for x in base]  # cosine ≈ 1 with the {10, 11} pair
     new = spark.createDataFrame(
@@ -682,16 +790,16 @@ def test_embedding_index_staleness_warns_on_drift(spark, caplog, tmp_path):
     from portuguese_pt_legal_ner_spark.operators.dedup import (
         embedding_assign_new,
         embedding_index,
-        load_embedding_index,
+        load_index,
     )
 
     rows = [(i, [float(i == j) for j in range(64)]) for i in range(5)]
     emb = spark.createDataFrame(rows, "vec_id long, embedding array<float>")
     idx = embedding_index(emb, threshold=0.9)
-    assert idx.n_vectors == 5
+    assert idx.n_docs == 5
     idx.save(str(tmp_path / "eidx"))
-    idx2 = load_embedding_index(spark, str(tmp_path / "eidx"))
-    assert idx2.n_vectors == 5
+    idx2 = load_index(spark, str(tmp_path / "eidx"))
+    assert idx2.n_docs == 5
     grown = emb.unionByName(
         spark.createDataFrame(
             [(99, [0.5] * 64)], "vec_id long, embedding array<float>"
@@ -732,7 +840,7 @@ def test_simhash_index_assign_and_staleness(spark, caplog, tmp_path):
     import logging
 
     from portuguese_pt_legal_ner_spark.operators.dedup import (
-        load_simhash_index,
+        load_index,
         simhash_assign_new,
         simhash_index,
     )
@@ -742,7 +850,7 @@ def test_simhash_index_assign_and_staleness(spark, caplog, tmp_path):
     idx = simhash_index(corpus, max_hamming=7, n_bands=8)
     assert idx.n_docs == 4
     idx.save(str(tmp_path / "shidx"))
-    idx2 = load_simhash_index(spark, str(tmp_path / "shidx"))
+    idx2 = load_index(spark, str(tmp_path / "shidx"))
     assert (idx2.n_docs, idx2.n_bands) == (4, 8)
 
     new_docs = spark.createDataFrame(
@@ -766,26 +874,27 @@ def test_simhash_index_assign_and_staleness(spark, caplog, tmp_path):
 
 def test_simhash_assign_pigeonhole_enforced(spark):
     from portuguese_pt_legal_ner_spark.operators.dedup import (
-        SimHashIndex,
+        SIM_XXH64,
+        NearDupIndex,
         simhash_assign_new,
     )
     import pytest as _pytest
 
     empty = spark.createDataFrame([], "doc_id long, sim long, band_idx int, band_val long")
     clusters = spark.createDataFrame([], "doc_id long, cluster_id long")
-    idx = SimHashIndex(empty, clusters, n_bands=4)
+    idx = NearDupIndex(empty, clusters, family=SIM_XXH64.name, n_bands=4)
     docs = spark.createDataFrame([], "doc_id long, text string")
     with _pytest.raises(ValueError, match="pigeonhole"):
         simhash_assign_new(idx, docs, max_hamming=4)
 
 
 def test_simhash_assign_reads_no_corpus_text(spark, tmp_path):
-    """Machine-check the SimHashIndex claim: assignment's physical plan
+    """Machine-check the simhash index claim: assignment's physical plan
     scans the INDEX parquet (bands/clusters) and the increment, but
     never the corpus documents — the hamming verify runs on sim words
     the index already stores."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (
-        load_simhash_index,
+        load_index,
         simhash_assign_new,
         simhash_index,
     )
@@ -797,7 +906,7 @@ def test_simhash_assign_reads_no_corpus_text(spark, tmp_path):
     )
     idx = simhash_index(spark.read.parquet(corpus_path), max_hamming=7, n_bands=8)
     idx.save(str(tmp_path / "shidx"))
-    idx2 = load_simhash_index(spark, str(tmp_path / "shidx"))
+    idx2 = load_index(spark, str(tmp_path / "shidx"))
     new_docs = spark.createDataFrame(
         [(100, BASE)], "doc_id long, text string"
     )

@@ -59,7 +59,7 @@ def test_pack_token_bins_deterministic(spark, docs):
 def test_minhash_md5_dedup_clusters_planted(spark):
     """The SQL-oracled full clustering path: planted near-dups merge,
     singletons stay, representative is the numeric min."""
-    from portuguese_pt_legal_ner_spark.operators.dedup import minhash_md5_dedup
+    from portuguese_pt_legal_ner_spark.operators.dedup import MD5, minhash_dedup
 
     base = "o tribunal da relacao confirmou a sentenca do processo numero "
     rows = [
@@ -71,7 +71,7 @@ def test_minhash_md5_dedup_clusters_planted(spark):
     docs = spark.createDataFrame(rows, "doc_id long, text string")
     clusters = {
         r["doc_id"]: r["cluster_id"]
-        for r in minhash_md5_dedup(docs, threshold=0.5).collect()
+        for r in minhash_dedup(docs, threshold=0.5, family=MD5).collect()
     }
     assert clusters[2] == clusters[9] == 2  # numeric min, not "10"
     assert clusters[10] == 2

@@ -407,12 +407,12 @@ def test_stream_cli_neardup_two_runs(spark, tmp_path):
 
 def test_stream_simhash_family_matches_batch_md5(spark):
     """The in-stream pandas-UDF simhash is bit-identical to the batch
-    simhash_md5_table (the DuckDB-oracled family) — the contract that
+    simhash_table over SIM_MD5 (the DuckDB-oracled family) — the contract that
     makes the streaming pair set value-checkable against the batch
     path, including whitespace/empty edge texts (Spark trim strips
     ONLY spaces; split('\\s+') is ASCII Java \\s and keeps leading
     empties)."""
-    from portuguese_pt_legal_ner_spark.operators.dedup import simhash_md5_table
+    from portuguese_pt_legal_ner_spark.operators.dedup import SIM_MD5, simhash_table
     from portuguese_pt_legal_ner_spark.streaming.neardup import (
         simhash32_md5_pandas,
     )
@@ -431,7 +431,7 @@ def test_stream_simhash_family_matches_batch_md5(spark):
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
     )
     batch = {
-        r["doc_id"]: r["sim"] for r in simhash_md5_table(df).collect()
+        r["doc_id"]: r["sim"] for r in simhash_table(df, SIM_MD5).collect()
     }
     stream_form = {
         r["doc_id"]: r["sim"]
@@ -445,13 +445,14 @@ def test_stream_simhash_family_matches_batch_md5(spark):
 def test_stream_neardup_pairs_agree_with_batch_family(spark, tmp_path):
     """Finalized-horizon agreement: with every document inside the
     horizon and no bucket capped, the stream's distinct pair set
-    EQUALS the batch simhash_md5_neardup_pairs output (same md5
+    EQUALS the batch SIM_MD5 simhash_neardup_pairs output (same md5
     family, same banding, same hamming verify) — the round-4 verdict's
     missing value-check for the streaming tier."""
     from datetime import datetime, timedelta
 
     from portuguese_pt_legal_ner_spark.operators.dedup import (
-        simhash_md5_neardup_pairs,
+        SIM_MD5,
+        simhash_neardup_pairs,
     )
     from portuguese_pt_legal_ner_spark.streaming.neardup import (
         DOCS_STREAM_SCHEMA,
@@ -488,8 +489,8 @@ def test_stream_neardup_pairs_agree_with_batch_family(spark, tmp_path):
     )
     batch_pairs = {
         (r["doc_a"], r["doc_b"], r["hamming"])
-        for r in simhash_md5_neardup_pairs(
-            batch_df, max_hamming=3, n_bands=4
+        for r in simhash_neardup_pairs(
+            batch_df, max_hamming=3, n_bands=4, family=SIM_MD5
         ).collect()
     }
     assert stream_pairs == batch_pairs

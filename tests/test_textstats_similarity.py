@@ -447,7 +447,7 @@ def test_ivf_staleness_after_append(spark, emb, queries, tmp_path, caplog):
     )
 
     idx = ivf_index(emb, n_cells=4, iters=1, seed=42)
-    assert idx.n_vectors == emb.count()
+    assert idx.n_docs == emb.count()
     assert not idx.is_stale(emb)
     # fresh index + current table: no warning
     with caplog.at_level(
@@ -469,7 +469,7 @@ def test_ivf_staleness_after_append(spark, emb, queries, tmp_path, caplog):
     # fingerprint round-trips through save/load
     idx.save(str(tmp_path / "ivf"))
     loaded = load_ivf_index(spark, str(tmp_path / "ivf"))
-    assert loaded.n_vectors == idx.n_vectors
+    assert loaded.n_docs == idx.n_docs
     assert loaded.is_stale(appended)
     idx.unpersist()
     loaded.unpersist()
@@ -552,7 +552,7 @@ def test_ivf_append_extends_index_without_retrain(spark, emb, queries):
     idx = ivf_index(base, n_cells=8, iters=2, seed=42)
     assert idx.is_stale(emb)  # built over the subset
     grown = ivf_append(idx, extra)
-    assert grown.n_vectors == emb.count()
+    assert grown.n_docs == emb.count()
     assert not grown.is_stale(emb)  # fingerprint covers the append
     assert grown.centroids == idx.centroids  # no retrain
     # appended vectors are reachable: probing with FULL coverage must
