@@ -528,8 +528,12 @@ class NearDupIndex(IndexSnapshot):
 
 def load_index(spark, path: str) -> NearDupIndex:
     """Load a saved NearDupIndex of any family. An index saved before
-    the meta row named its family (meta = n_docs only, or no meta at
-    all) loads as the xxhash64 minhash family at ngram 3."""
+    the meta row named its family takes it from the band table schema:
+    a `sim` column is the xxhash64 simhash family, `vec_id` is SRP,
+    anything else the xxhash64 minhash family at ngram 3. Those older
+    layouts recorded the row count as `n_docs` (minhash, simhash) or
+    `n_vectors` (SRP); a missing band count is read off the band table
+    (minhash: the fixed XXH64 banding)."""
     from pyspark.errors import AnalysisException  # noqa: PLC0415
 
     meta = {}
@@ -537,13 +541,25 @@ def load_index(spark, path: str) -> NearDupIndex:
         meta = spark.read.parquet(f"{path}/meta").collect()[0].asDict()
     except AnalysisException:  # pre-meta index layout: no meta dir
         pass
+    bands = spark.read.parquet(f"{path}/bands")
+    family = meta.get("family")
+    if family is None:
+        family = (
+            SIM_XXH64.name if "sim" in bands.columns
+            else SRP if "vec_id" in bands.columns else XXH64.name
+        )
+        meta.setdefault("ngram", 3 if family == XXH64.name else None)
+    n_bands = meta.get("n_bands")
+    if n_bands is None:
+        top = None if family == XXH64.name else bands.agg(F.max("band_idx")).first()[0]
+        n_bands = XXH64.n_bands if top is None else top + 1
     return NearDupIndex(
-        spark.read.parquet(f"{path}/bands"),
+        bands,
         spark.read.parquet(f"{path}/clusters"),
-        meta.get("n_docs"),
-        meta.get("family", XXH64.name),
-        meta.get("ngram", 3),
-        meta.get("n_bands", XXH64.n_bands),
+        meta.get("n_docs", meta.get("n_vectors")),
+        family,
+        meta.get("ngram"),
+        n_bands,
     )
 
 
@@ -1076,24 +1092,22 @@ def simhash_index(
     max_hamming: int = 3,
     n_bands: int = 4,
     checkpoint_dir: str | None = None,
-    family: SimHashFamily = SIM_XXH64,
 ) -> NearDupIndex:
-    """Build the incremental simhash index: ONE simhash pass (the
+    """Build the incremental xxhash64 simhash index: ONE simhash pass (the
     persisted sim table feeds both the band table and the clustering),
     corpus row count recorded as the staleness fingerprint, `n_bands`
     recorded so assigns slice the increment the same way. Persisted
     intermediates go to the module cache tracker (drain with
     cache.release_tracked() after save())."""
-    _check_sim_banding(family, n_bands, max_hamming)
-    sh = simhash_table(docs, family).persist()
+    _check_sim_banding(SIM_XXH64, n_bands, max_hamming)
+    sh = simhash_table(docs).persist()
     register(None, sh)
     clusters = simhash_dedup(
-        docs, max_hamming, n_bands, checkpoint_dir=checkpoint_dir, sh=sh,
-        family=family,
+        docs, max_hamming, n_bands, checkpoint_dir=checkpoint_dir, sh=sh
     )
     return NearDupIndex(
-        _sim_bands(sh, family, n_bands), clusters, docs.count(), family.name,
-        None, n_bands,
+        _sim_bands(sh, SIM_XXH64, n_bands), clusters, docs.count(),
+        SIM_XXH64.name, None, n_bands,
     )
 
 

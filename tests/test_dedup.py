@@ -487,6 +487,30 @@ def test_ngram_jaccard_doc_freq_cap(spark):
     assert any(n == 21 for n in freq.values())
 
 
+def _assign_corpus(spark):
+    base = "o tribunal da relacao confirmou a sentenca no processo "
+    corpus = spark.createDataFrame(
+        [
+            (2, base + "um dois tres quatro cinco seis sete oito"),
+            (9, base + "um dois tres quatro cinco seis sete oito"),
+            (40, " ".join(f"token{i}" for i in range(30))),
+        ],
+        "doc_id long, text string",
+    )
+    new = spark.createDataFrame(
+        [
+            (100, base + "um dois tres quatro cinco seis sete NOVE"),
+            (101, " ".join(f"outro{i}" for i in range(25))),
+        ],
+        "doc_id long, text string",
+    )
+    return corpus, new
+
+
+def _rows(df):
+    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
+
+
 def test_minhash_incremental_assignment(spark, tmp_path):
     """Build-once / assign-increments (the daily-crawl shape): a new
     near-dup of a corpus doc joins that doc's cluster through the
@@ -498,26 +522,11 @@ def test_minhash_incremental_assignment(spark, tmp_path):
         minhash_index,
     )
 
-    base = "o tribunal da relacao confirmou a sentenca no processo "
-    corpus = spark.createDataFrame(
-        [
-            (2, base + "um dois tres quatro cinco seis sete oito"),
-            (9, base + "um dois tres quatro cinco seis sete oito"),
-            (40, " ".join(f"token{i}" for i in range(30))),
-        ],
-        "doc_id long, text string",
-    )
+    corpus, new = _assign_corpus(spark)  # 100 near-dups 2/9, 101 is novel
     idx = minhash_index(corpus, threshold=0.5)
     idx.save(str(tmp_path / "mhidx"))
     loaded = load_minhash_index(spark, str(tmp_path / "mhidx"))
 
-    new = spark.createDataFrame(
-        [
-            (100, base + "um dois tres quatro cinco seis sete NOVE"),  # near-dup
-            (101, " ".join(f"outro{i}" for i in range(25))),           # novel
-        ],
-        "doc_id long, text string",
-    )
     assigned = {
         r["doc_id"]: r["cluster_id"]
         for r in minhash_assign_new(
@@ -533,16 +542,19 @@ def test_minhash_incremental_assignment(spark, tmp_path):
         minhash_assign_new(loaded, new, threshold=0.5)
 
 
-def test_minhash_md5_incremental_assignment(spark):
+def test_minhash_md5_incremental_assignment(spark, tmp_path):
     """The md5-family twin of incremental assignment (the variant that
     carries the driver's SQL oracle): same assign operator, md5 bands
-    (read from the index's family).
-    Checks the three semantic branches — join an existing cluster via
-    the numeric-min representative, tie-break to the SMALLEST
-    cluster_id when several corpus partners verify, and found a new
-    cluster when nothing does."""
+    (read from the index's family). The index records its family, so
+    save → load_minhash_index → assign bands the increment in md5
+    without the caller naming the family, and matches the in-memory
+    assign. Checks the three semantic branches — join an existing
+    cluster via the numeric-min representative, tie-break to the
+    SMALLEST cluster_id when several corpus partners verify, and found
+    a new cluster when nothing does."""
     from portuguese_pt_legal_ner_spark.operators.dedup import (
         MD5,
+        load_minhash_index,
         minhash_assign_new,
         minhash_index,
     )
@@ -570,60 +582,15 @@ def test_minhash_md5_incremental_assignment(spark):
         ],
         "doc_id long, text string",
     )
-    assigned = {
-        r["doc_id"]: r["cluster_id"]
-        for r in minhash_assign_new(
-            idx, new, threshold=0.5, corpus_docs=corpus
-        ).collect()
-    }
+    assigned = _rows(minhash_assign_new(idx, new, threshold=0.5, corpus_docs=corpus))
     assert assigned[100] == 2    # joined the {2, 9} cluster
     assert assigned[101] == 101  # novel doc founds its own cluster
     assert assigned[102] == 5    # joined doc 5's cluster
-
-
-def _assign_corpus(spark):
-    base = "o tribunal da relacao confirmou a sentenca no processo "
-    corpus = spark.createDataFrame(
-        [
-            (2, base + "um dois tres quatro cinco seis sete oito"),
-            (9, base + "um dois tres quatro cinco seis sete oito"),
-            (40, " ".join(f"token{i}" for i in range(30))),
-        ],
-        "doc_id long, text string",
-    )
-    new = spark.createDataFrame(
-        [
-            (100, base + "um dois tres quatro cinco seis sete NOVE"),
-            (101, " ".join(f"outro{i}" for i in range(25))),
-        ],
-        "doc_id long, text string",
-    )
-    return corpus, new
-
-
-def _rows(df):
-    return {r["doc_id"]: r["cluster_id"] for r in df.collect()}
-
-
-def test_md5_index_round_trip_assigns_md5(spark, tmp_path):
-    """An md5-built index records its family: save → load_minhash_index
-    → minhash_assign_new bands the increment with md5 without the
-    caller naming the family, and matches the in-memory assign."""
-    from portuguese_pt_legal_ner_spark.operators.dedup import (
-        MD5,
-        load_minhash_index,
-        minhash_assign_new,
-        minhash_index,
-    )
-
-    corpus, new = _assign_corpus(spark)
-    idx = minhash_index(corpus, threshold=0.5, family=MD5)
     idx.save(str(tmp_path / "md5idx"))
     loaded = load_minhash_index(spark, str(tmp_path / "md5idx"))
     assert (loaded.family, loaded.ngram, loaded.n_bands) == ("md5", 3, 4)
-    in_memory = _rows(minhash_assign_new(idx, new, threshold=0.5, corpus_docs=corpus))
     got = _rows(minhash_assign_new(loaded, new, threshold=0.5, corpus_docs=corpus))
-    assert got == in_memory == {100: 2, 101: 101}
+    assert got == assigned
 
 
 def test_index_with_n_docs_only_meta_loads_as_xxh64(spark, tmp_path):
@@ -870,6 +837,54 @@ def test_simhash_index_assign_and_staleness(spark, caplog, tmp_path):
     with caplog.at_level(logging.WARNING, "portuguese_pt_legal_ner_spark.dedup"):
         simhash_assign_new(idx2, new_docs, max_hamming=7, current=grown).collect()
     assert any("stale" in r.message for r in caplog.records)
+
+
+def test_parent_simhash_and_embedding_meta_layouts_load(spark, tmp_path):
+    """Index dirs whose meta predates the family column keep their
+    family: a simhash dir with (n_docs, n_bands) meta loads as
+    SIM_XXH64 and assigns as the in-memory index does; an SRP dir with
+    (n_vectors) meta keeps its row count and its band count."""
+    from portuguese_pt_legal_ner_spark.operators.dedup import (
+        SIM_XXH64,
+        SRP,
+        embedding_index,
+        load_index,
+        simhash_assign_new,
+        simhash_index,
+    )
+
+    corpus = spark.createDataFrame(
+        [(0, BASE), (1, BASE), (2, NEAR), (3, FAR)], "doc_id long, text string"
+    )
+    idx = simhash_index(corpus, max_hamming=7, n_bands=8)
+    path = str(tmp_path / "shidx")
+    idx.save(path)
+    spark.createDataFrame([(4, 8)], "n_docs long, n_bands int").write.mode(
+        "overwrite"
+    ).parquet(f"{path}/meta")
+    loaded = load_index(spark, path)
+    assert (loaded.family, loaded.ngram, loaded.n_bands, loaded.n_docs) == (
+        SIM_XXH64.name, None, 8, 4
+    )
+    new = spark.createDataFrame(
+        [(100, BASE), (101, "totally novel content about unrelated affairs")],
+        "doc_id long, text string",
+    )
+    expected = _rows(simhash_assign_new(idx, new, max_hamming=7))
+    assert _rows(simhash_assign_new(loaded, new, max_hamming=7)) == expected
+    assert expected == {100: 0, 101: 101}
+
+    emb = spark.createDataFrame(
+        [(i, [float(i == j) for j in range(64)]) for i in range(5)],
+        "vec_id long, embedding array<float>",
+    )
+    epath = str(tmp_path / "eidx")
+    embedding_index(emb, threshold=0.9, n_bands=4).save(epath)
+    spark.createDataFrame([(5,)], "n_vectors long").write.mode("overwrite").parquet(
+        f"{epath}/meta"
+    )
+    eloaded = load_index(spark, epath)
+    assert (eloaded.family, eloaded.n_bands, eloaded.n_docs) == (SRP, 4, 5)
 
 
 def test_simhash_assign_pigeonhole_enforced(spark):
