@@ -27,6 +27,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
+
 
 def _symmetrize(edges: DataFrame) -> DataFrame:
     """Undirected edge list (u, v), deduped, self-loops dropped."""
@@ -92,8 +94,9 @@ def union_find_components(edges: DataFrame) -> DataFrame:
     work. Callers gate on a COUNTED edge bound (the pair set is
     already materialized/checkpointed when this is called) and fall
     back to the distributed algorithm beyond it — collect() here is
-    bounded by that gate, never by corpus size."""
-    sess = edges.sparkSession
+    bounded by that gate, never by corpus size. The result is a
+    JVM-local table (`local_table`): no Python-worker task re-runs
+    when a later plan reads it."""
     parent: dict[str, str] = {}
     nodes: set[str] = set()
 
@@ -113,8 +116,10 @@ def union_find_components(edges: DataFrame) -> DataFrame:
         if a != b:
             lo, hi = (a, b) if a < b else (b, a)
             parent[hi] = lo
-    return sess.createDataFrame(
-        [(n, find(n)) for n in sorted(nodes)], "node string, component string"
+    return local_table(
+        edges.sparkSession,
+        [(n, find(n)) for n in sorted(nodes)],
+        "node string, component string",
     )
 
 

@@ -50,6 +50,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from ..cache import register, sql_over
+from ..sources.tables import local_table
 
 
 @dataclass(frozen=True)
@@ -520,7 +521,8 @@ class NearDupIndex(IndexSnapshot):
     def save(self, path: str) -> None:
         self.bands.write.mode("overwrite").parquet(f"{path}/bands")
         self.clusters.write.mode("overwrite").parquet(f"{path}/clusters")
-        self.bands.sparkSession.createDataFrame(
+        local_table(
+            self.bands.sparkSession,
             [(self.n_docs, self.family, self.ngram, self.n_bands)],
             "n_docs long, family string, ngram int, n_bands int",
         ).write.mode("overwrite").parquet(f"{path}/meta")

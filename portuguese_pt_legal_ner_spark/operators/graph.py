@@ -21,7 +21,7 @@ from pyspark.sql import functions as F
 
 from ..cache import register
 from .canonicalize import components_auto
-from .linking import link_surfaces, normalize_surface_col
+from .linking import distinct_surfaces, link_tiers
 
 
 def entity_id_col(label_col, canonical_col):
@@ -41,23 +41,22 @@ def resolve_entities(
 
     Unlinked surfaces become their own canonical (normalized surface),
     then co-reference components merge surfaces that share a canonical:
-    an edge surface_norm ↔ 'canon:<label>:<canonical>' per link, and
-    connected components collapse alias families that exact+LSH tiers
-    discovered independently. Returns
+    one edge per distinct surface, from the surface node
+    's' + label + surface_norm to the canonical node
+    'c' + label + canonical, and connected components collapse alias
+    families that exact+LSH tiers discovered independently. Returns
     (surface, label, canonical, entity_id).
 
     `checkpoint_dir`: reliable-checkpoint directory for the CC
     iterations (config key kg.checkpoint_dir); default localCheckpoint
     is fast but unrecoverable on executor loss.
     """
-    links = link_surfaces(mentions, alias_dict)  # surface,label,surface_norm,canonical,sim,tier
-
-    all_surfaces = (
-        mentions.select("surface", "label")
-        .dropDuplicates(["surface", "label"])
-        .withColumn("surface_norm", normalize_surface_col(F.col("surface")))
-    )
-    resolved = all_surfaces.join(
+    # the distinct-surface table feeds both linking tiers AND the
+    # resolution join: persist it so the mentions input is scanned once
+    surfaces = distinct_surfaces(mentions).persist()
+    register(persist_registry, surfaces)
+    links = link_tiers(surfaces, alias_dict)  # surface,label,surface_norm,canonical,sim,tier
+    resolved = surfaces.join(
         links.select("surface", "label", "canonical", "sim", "tier"),
         ["surface", "label"],
         "left",
@@ -71,10 +70,10 @@ def resolve_entities(
     # the edge set AND the canonical vote below — persist so the
     # exact+LSH linking tiers run once, and the row count (an upper
     # bound on the edge count) gates the small-graph driver union-find
-    # fast path (canonicalize.components_auto). Recorded for release
-    # (persist_registry / cache.release_tracked) since the returned
-    # plan still references it — the caller unpersists after
-    # materializing.
+    # fast path (canonicalize.components_auto). Both persisted tables
+    # are recorded for release (persist_registry /
+    # cache.release_tracked) since the returned plan still references
+    # them — the caller unpersists after materializing.
     resolved = resolved.persist()
     register(persist_registry, resolved)
     n_edges = resolved.count()

@@ -2,15 +2,19 @@
 
 Two-tier candidate generation per the north_star:
 
-  1. exact tier — normalize the surface and broadcast-join the alias
-     dictionary (small side by construction; the canonical-ID
+  1. exact tier — normalize the surface and broadcast-left-join the
+     alias dictionary (small side by construction; the canonical-ID
      dictionary broadcast is also the skew tactic SURVEY §4 mandates);
+     the same join yields the unmatched remainder;
   2. LSH tier — surfaces missed by tier 1 go through hand-rolled
      MinHash-LSH blocking over character 3-gram shingles (banding →
      band-hash equi-join → exact Jaccard verification → best match).
      Hand-rolled in pure DataFrame ops (xxhash64/array functions)
-     rather than pyspark.ml so there is no Vector conversion detour
-     and the whole stage stays in whole-stage codegen.
+     rather than pyspark.ml so there is no Vector conversion detour.
+     The shingle and signature expressions are higher-order functions,
+     which are CodegenFallback: they run interpreted inside an
+     otherwise codegen'd stage. That is cheap here because the input
+     is the distinct-surface set, not the mention rows.
 
 Scale notes:
   * the alias dict stays broadcastable (it is the *canonicalized*
@@ -55,62 +59,66 @@ def char_shingles(col: Column, n: int = 3) -> Column:
     )
 
 
-def link_exact(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
-    """Tier 1: broadcast equi-join on (normalized surface, label).
+def distinct_surfaces(mentions: DataFrame) -> DataFrame:
+    """Distinct (surface, label) pairs of `mentions` plus surface_norm:
+    the input of both linking tiers."""
+    return (
+        mentions.select("surface", "label")
+        .dropDuplicates(["surface", "label"])
+        .withColumn("surface_norm", normalize_surface_col(F.col("surface")))
+    )
+
+
+def link_exact(
+    surfaces: DataFrame, alias_dict: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """Tier 1: one broadcast left join on (normalized surface, label).
 
     `surfaces`: distinct (surface, label) pairs with surface_norm.
-    Returns (surface, label, canonical, sim=1.0, tier='exact').
+    Returns (exact, unmatched): the linked rows as (surface, label,
+    surface_norm, canonical, sim=1.0, tier='exact'), and the
+    (surface, label, surface_norm) rows that matched no alias.
     """
-    return (
-        surfaces.join(
-            F.broadcast(alias_dict),
-            (surfaces.surface_norm == alias_dict.alias_norm)
-            & (surfaces.label == alias_dict.label),
-        )
-        .select(
-            surfaces.surface,
-            surfaces.label,
-            surfaces.surface_norm,
-            alias_dict.canonical,
-            F.lit(1.0).alias("sim"),
-            F.lit("exact").alias("tier"),
-        )
+    alias = F.broadcast(
+        alias_dict.select("alias_norm", "canonical", F.col("label").alias("_al"))
     )
+    tagged = surfaces.join(
+        alias,
+        (F.col("surface_norm") == F.col("alias_norm")) & (F.col("label") == F.col("_al")),
+        "left",
+    )
+    matched = F.col("alias_norm").isNotNull()
+    exact = tagged.filter(matched).select(
+        "surface", "label", "surface_norm", "canonical",
+        F.lit(1.0).alias("sim"), F.lit("exact").alias("tier"),
+    )
+    unmatched = tagged.filter(~matched).select("surface", "label", "surface_norm")
+    return exact, unmatched
+
+
+# MinHash h_i(S) = min over shingles x of xxhash64(x, i); a band's key
+# hashes its ROWS_PER_BAND signature slots together. Each is one SQL
+# string parsed once: the same lambdas and structs built through the
+# Column API cost thousands of py4j round trips per plan.
+_SIGNATURE_SQL = "array({})".format(", ".join(
+    f"array_min(transform(_sh, x -> xxhash64(x, {i})))" for i in range(N_HASHES)
+))
+_BANDS_SQL = "array({})".format(", ".join(
+    "named_struct('band_idx', {}, 'band_hash', xxhash64({}))".format(
+        b, ", ".join(f"_sig[{b * ROWS_PER_BAND + r}]" for r in range(ROWS_PER_BAND))
+    )
+    for b in range(N_BANDS)
+))
 
 
 def _with_minhash_bands(df: DataFrame, text_col: str) -> DataFrame:
-    """Add exploded (band_idx, band_hash) per row.
-
-    MinHash h_i(S) = min over shingles x of xxhash64(x, i); a band's
-    key hashes its ROWS_PER_BAND signature slots together.
-    """
-    def _minhash(i: int):
-        # NB: the lambda must take exactly ONE argument — F.transform
-        # passes (element, index) to two-argument callables, which
-        # would silently shadow the hash-function id.
-        return F.array_min(
-            F.transform(F.col("_sh"), lambda x: F.xxhash64(x, F.lit(i)))
-        )
-
-    shingled = df.withColumn("_sh", char_shingles(F.col(text_col)))
-    sig = shingled.withColumn(
-        "_sig", F.array(*[_minhash(i) for i in range(N_HASHES)])
-    )
-    bands = F.array(
-        *[
-            F.struct(
-                F.lit(b).alias("band_idx"),
-                F.xxhash64(
-                    *[F.col("_sig")[b * ROWS_PER_BAND + r] for r in range(ROWS_PER_BAND)]
-                ).alias("band_hash"),
-            )
-            for b in range(N_BANDS)
-        ]
-    )
+    """Add the shingle array `_sh` and exploded (band_idx, band_hash)
+    per row."""
     return (
-        sig.withColumn("_band", F.explode(bands))
-        .withColumn("band_idx", F.col("_band.band_idx"))
-        .withColumn("band_hash", F.col("_band.band_hash"))
+        df.withColumn("_sh", char_shingles(F.col(text_col)))
+        .withColumn("_sig", F.expr(_SIGNATURE_SQL))
+        .withColumn("_band", F.explode(F.expr(_BANDS_SQL)))
+        .select("*", "_band.*")
         .drop("_band", "_sig")
     )
 
@@ -123,7 +131,7 @@ def link_lsh(
     """Tier 2: MinHash-LSH blocking + exact-Jaccard verify + best-match.
 
     `unmatched`: distinct (surface, label, surface_norm) not linked by
-    tier 1. Returns same shape as link_exact with tier='lsh'.
+    tier 1. Returns the shape of link_exact's exact rows with tier='lsh'.
     """
     left = _with_minhash_bands(
         unmatched.select("surface", "label", "surface_norm"), "surface_norm"
@@ -164,25 +172,16 @@ def link_lsh(
     )
 
 
+def link_tiers(surfaces: DataFrame, alias_dict: DataFrame) -> DataFrame:
+    """Exact tier, then the LSH tier on its remainder, over a
+    `distinct_surfaces` table."""
+    exact, unmatched = link_exact(surfaces, alias_dict)
+    return exact.unionByName(link_lsh(unmatched, alias_dict))
+
+
 def link_surfaces(mentions: DataFrame, alias_dict: DataFrame) -> DataFrame:
     """Full linking: distinct surfaces → exact tier → LSH tier on the
     remainder → union. Returns (surface, label, surface_norm,
     canonical, sim, tier); surfaces matching nothing are absent
     (callers left-join and treat null canonical as a new entity)."""
-    surfaces = (
-        mentions.select("surface", "label")
-        .dropDuplicates(["surface", "label"])
-        .withColumn("surface_norm", normalize_surface_col(F.col("surface")))
-    )
-    exact = link_exact(surfaces, alias_dict)
-    matched_keys = exact.select(
-        F.col("surface_norm").alias("_sn"), F.col("label").alias("_l")
-    )
-    unmatched = surfaces.join(
-        matched_keys,
-        (surfaces.surface_norm == matched_keys._sn)
-        & (surfaces.label == matched_keys._l),
-        "left_anti",
-    )
-    lsh = link_lsh(unmatched, alias_dict)
-    return exact.unionByName(lsh)
+    return link_tiers(distinct_surfaces(mentions), alias_dict)

@@ -27,6 +27,7 @@ import random
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..sources.tables import local_table
 from .dedup import (
     MAX_BAND_BUCKET,
     IndexSnapshot,
@@ -455,14 +456,15 @@ class IVFIndex(IndexSnapshot):
 
     def save(self, path: str) -> None:
         spark = self.cells.sparkSession
-        spark.createDataFrame(
+        local_table(
+            spark,
             [(i, [float(x) for x in c]) for i, c in enumerate(self.centroids)],
             "cell int, centroid array<double>",  # double: exact round-trip
         ).write.mode("overwrite").parquet(f"{path}/centroids")
         self.cells.write.mode("overwrite").parquet(f"{path}/cells")
-        spark.createDataFrame(
-            [(self.n_docs,)], "n_vectors long"
-        ).write.mode("overwrite").parquet(f"{path}/meta")
+        local_table(spark, [(self.n_docs,)], "n_vectors long").write.mode(
+            "overwrite"
+        ).parquet(f"{path}/meta")
 
     def unpersist(self) -> None:
         self.cells.unpersist()

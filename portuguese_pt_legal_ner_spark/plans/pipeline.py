@@ -32,6 +32,7 @@ from pyspark.sql import functions as F
 from ..operators.graph import edges_table, entities_table, resolve_entities
 from ..operators.mentions import detect_mentions
 from ..operators.triples import lift_triples
+from ..sources.tables import local_table
 
 
 def extract_triples(transcripts: DataFrame, persist: bool = False) -> DataFrame:
@@ -76,8 +77,15 @@ class KGPipeline:
             return [json.loads(line) for line in f if line.strip()]
 
     def checkpoints_df(self) -> DataFrame:
-        rows = self.read_meta("checkpoints")
-        return self.spark.createDataFrame(rows) if rows else self.spark.range(0)
+        """The `checkpoints` rows as a JVM-local table. Columns keep the
+        order `createDataFrame` infers from dict rows (sorted by name);
+        rows_in is typed although every row records it as null."""
+        return local_table(
+            self.spark,
+            self.read_meta("checkpoints"),
+            "rows_in long, rows_out long, run_id string, stage string,"
+            " status string, updated_ts double",
+        )
 
     # -- stage execution ---------------------------------------------------
 

@@ -62,9 +62,33 @@ def synthetic_transcripts(
     return df
 
 
+def local_table(
+    spark: SparkSession, rows: list[tuple] | list[dict], schema: T.StructType | str
+) -> DataFrame:
+    """A small driver-built table as a JVM-local relation.
+
+    Rows are tuples in schema order or dicts keyed by field name;
+    `schema` is a StructType or a DDL string. The rows go to the JVM as
+    one Arrow table and plan as a `LocalRelation`. `createDataFrame(list)`
+    plans as a Python RDD instead, which every reference of the
+    DataFrame re-runs in Python workers."""
+    import pyarrow as pa  # noqa: PLC0415
+    from pyspark.sql.pandas.types import to_arrow_schema  # noqa: PLC0415
+
+    if isinstance(schema, str):
+        schema = T.StructType.fromDDL(schema)
+    names = schema.fieldNames()
+    table = pa.Table.from_pylist(
+        [r if isinstance(r, dict) else dict(zip(names, r)) for r in rows],
+        schema=to_arrow_schema(schema),
+    )
+    return spark.createDataFrame(table, schema=schema)
+
+
 def alias_dict_df(spark: SparkSession) -> DataFrame:
-    """The entity-linking dictionary — small, broadcast side."""
-    return spark.createDataFrame(generate_alias_dict(), schema=ALIAS_DICT_SCHEMA)
+    """The entity-linking dictionary — small, broadcast side — as a
+    JVM-local table (`local_table`)."""
+    return local_table(spark, generate_alias_dict(), ALIAS_DICT_SCHEMA)
 
 
 def distributed_transcripts(

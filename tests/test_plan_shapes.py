@@ -21,10 +21,10 @@ from pyspark.sql import functions as F
 PAYLOAD_COLS = ("text#", "embedding#", "qe#", "ce#", "ea#", "eb#", "g#", "tok#")
 
 
-def _formatted_plan(df) -> str:
+def _plan(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain("formatted")
+        df.explain(mode)
     return buf.getvalue()
 
 
@@ -71,7 +71,7 @@ def test_srp_ann_topk_exchanges_carry_no_vectors(spark, emb):
     q = emb.filter(F.col("vec_id") < 5).select(
         F.col("vec_id").alias("qid"), F.col("embedding").alias("qe")
     )
-    plan = _formatted_plan(srp_ann_topk(emb, q, k=5))
+    plan = _plan(srp_ann_topk(emb, q, k=5))
     _assert_no_payload(_exchange_inputs(plan))
 
 
@@ -82,7 +82,7 @@ def test_minhash_pairs_exchanges_carry_no_text(spark, docs):
         minhash_candidate_pairs,
     )
 
-    plan = _formatted_plan(minhash_candidate_pairs(docs))
+    plan = _plan(minhash_candidate_pairs(docs))
     _assert_no_payload(_exchange_inputs(plan))
 
 
@@ -93,7 +93,7 @@ def test_simhash_pairs_band_exchanges_slim(spark, docs):
         simhash_neardup_pairs,
     )
 
-    plan = _formatted_plan(simhash_neardup_pairs(docs, max_hamming=3, n_bands=4))
+    plan = _plan(simhash_neardup_pairs(docs, max_hamming=3, n_bands=4))
     _assert_no_payload(_exchange_inputs(plan))
 
 
@@ -109,7 +109,7 @@ def test_detector_scan_is_column_pruned(spark):
     with tempfile.TemporaryDirectory() as d:
         path = f"{d}/t.parquet"
         synthetic_transcripts(spark, n_conversations=5, seed=1).write.parquet(path)
-        plan = _formatted_plan(detect_mentions(spark.read.parquet(path)))
+        plan = _plan(detect_mentions(spark.read.parquet(path)))
         m = re.search(r"ReadSchema: struct<([^>]*)>", plan)
         assert m, plan
         read_cols = {c.split(":")[0] for c in m.group(1).split(",")}
@@ -126,7 +126,7 @@ def test_duplicated_spans_exchanges_carry_no_text(spark, docs):
 
     from portuguese_pt_legal_ner_spark.operators.dedup import duplicated_spans
 
-    plan = _formatted_plan(duplicated_spans(docs))
+    plan = _plan(duplicated_spans(docs))
     exchanges = _exchange_inputs(plan)
     _assert_no_payload(exchanges)
     for inputs, args in exchanges:
@@ -134,3 +134,64 @@ def test_duplicated_spans_exchanges_carry_no_text(spark, docs):
             assert not _re.search(r"[\[,\s]t#", inputs), (
                 f"raw token array rides exchange: {inputs}"
             )
+
+
+def test_small_driver_tables_plan_as_local_relation(spark, tmp_path):
+    """The alias dictionary, the driver union-find output and the
+    pipeline checkpoint rows are JVM-local tables: a
+    `createDataFrame(list)` LogicalRDD re-runs Python-worker tasks on
+    every reference. The empty union-find keeps its (node, component)
+    schema; checkpoint rows whose rows_in is always null still type."""
+    from portuguese_pt_legal_ner_spark.operators.canonicalize import (
+        union_find_components,
+    )
+    from portuguese_pt_legal_ner_spark.plans.pipeline import KGPipeline
+    from portuguese_pt_legal_ner_spark.sources.tables import alias_dict_df
+
+    edges = spark.range(6).select(
+        F.col("id").cast("string").alias("src"),
+        (F.col("id") % 3).cast("string").alias("dst"),
+    )
+    empty = union_find_components(edges.limit(0))
+    assert empty.count() == 0
+    assert empty.schema.simpleString() == "struct<node:string,component:string>"
+    pipeline = KGPipeline(spark, str(tmp_path))
+    for status, rows_out in (("skipped", None), ("complete", 5)):
+        pipeline._append_meta("checkpoints", {
+            "run_id": "r", "stage": "s", "status": status,
+            "rows_in": None, "rows_out": rows_out, "updated_ts": 1.5,
+        })
+    checkpoints = pipeline.checkpoints_df()
+    assert [tuple(r) for r in checkpoints.collect()] == [
+        (None, None, "r", "s", "skipped", 1.5), (None, 5, "r", "s", "complete", 1.5),
+    ]
+    for df in (alias_dict_df(spark), union_find_components(edges), empty, checkpoints):
+        plan = _plan(df, "extended")
+        assert "LocalRelation" in plan and "LogicalRDD" not in plan, plan
+
+
+def test_resolution_scans_mentions_once_without_python_rdd(spark, tmp_path):
+    """resolve_entities over the alias dictionary plans no LogicalRDD,
+    and the distinct-surface table it persists is the only reader of
+    the mentions parquet: formatted explain numbers each distinct
+    operator once, cached sub-plans included."""
+    from portuguese_pt_legal_ner_spark.operators.graph import resolve_entities
+    from portuguese_pt_legal_ner_spark.sources.tables import alias_dict_df
+
+    path = str(tmp_path / "mentions")
+    spark.createDataFrame(
+        [("João Silva", "PER"), ("Joao Silvaa", "PER"), ("TJ Lisboa", "ORG"),
+         ("Tribunal de Justica", "ORG"), ("Zzz", "PER")] * 2,
+        "surface string, label string",
+    ).write.parquet(path)
+    registry: list = []
+    out = resolve_entities(
+        spark.read.parquet(path), alias_dict_df(spark), persist_registry=registry
+    )
+    try:
+        assert "LogicalRDD" not in _plan(out, "extended")
+        scans = re.findall(r"^\(\d+\) Scan parquet", _plan(out), re.M)
+        assert len(scans) == 1, scans
+    finally:
+        for df in registry:
+            df.unpersist()
